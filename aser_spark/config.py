@@ -50,8 +50,8 @@ def get_spark(app="aser-spark", cpus: int | None = None, shuffle_partitions: int
         # workers keep the Zipf sentence memos warm across tasks, and the
         # cross-mode heap poison that reuse used to carry (4-8x slower
         # kernel tasks after a prior mode's memos went resident) is fixed
-        # at the source — _sentence_cache evicts + trims the stale mode's
-        # state on switch (pipeline/extract.py; forensics in
+        # at the source — a mode switch in _sentence_cache resets every
+        # worker memo and trims the heap (kernel/memo.py; forensics in
         # BENCH/NOTES.md §r6).  reuse=false was tried and reverted: per-
         # stage mass worker exits (32 procs x 100-400MB heaps) feed the
         # sandbox kernel's reclaim backlog, the very storm being avoided.

@@ -42,6 +42,7 @@ the PDTB 2.0 corpus / Wang & Lan CoNLL-2015 parser resources).
 
 from __future__ import annotations
 
+from . import memo as _memo
 from .clauses import PUNCTUATION_SET, get_clauses, strip_punctuations
 from .extractor import extract_sentence_eventualities
 
@@ -856,13 +857,11 @@ def _boundary_ctx(filtered, i, step):
     """The ONE (token, pos) a D2 feature walk can observe beyond sentence
     ``i`` in direction ``step`` — exactly ``_adjacent_token``'s first move
     across the boundary (it returns after a single step); None at the
-    document edge."""
+    document edge.  Like ``_adjacent_token``, an empty neighbor raises."""
     j = i + step
     if j < 0 or j >= len(filtered):
         return None
     sp = filtered[j]
-    if not sp["tokens"]:
-        return None
     k = -1 if step < 0 else 0
     return (sp["tokens"][k], sp["pos_tags"][k])
 
@@ -878,7 +877,7 @@ def _d2_accepted(filtered, i, tree, models, cands):
     ``(text, prev_ctx, next_ctx, tree-is-None)`` exactly keys the accepted
     set.  Zipf-hot sentences previously re-featurized + re-classified
     every candidate on every occurrence in every conversation; this is
-    the relation-pass sibling of the always-on ``_CAND_MEMO`` (single-
+    the relation-pass sibling of the always-on candidate memo (single-
     sentence keys — high hit rate, trivial key build — unlike the
     measured-slower full pair memo).  Values are immutable tuples; the
     caller builds fresh dicts, so downstream mutation (arg spans) cannot
@@ -887,21 +886,14 @@ def _d2_accepted(filtered, i, tree, models, cands):
     key = (sp["text"], _boundary_ctx(filtered, i, -1),
            _boundary_ctx(filtered, i, +1),
            tree is None or tree.tree is None)
-    hit = _D2_MEMO.get(key)
+    hit = _memo.D2.get(key)
     if hit is None:
         hit = tuple(
             (c["connective"], tuple(c["indices"])) for c in cands
             if models.is_connective(connective_feature_strings(
                 filtered, i, c["indices"], tree)))
-        with _PAIR_MEMO_LOCK:  # atomic evict+insert (daemon threads)
-            if len(_D2_MEMO) >= _D2_MEMO_MAX:
-                _D2_MEMO.clear()
-            _D2_MEMO[key] = hit
+        _memo.D2.put(key, hit)
     return hit
-
-
-_D2_MEMO: dict = {}
-_D2_MEMO_MAX = 1 << 16
 
 
 def _sentence_connective_rows(filtered, sentences, para_eventualities,
@@ -912,7 +904,12 @@ def _sentence_connective_rows(filtered, sentences, para_eventualities,
     candidates.  Per-connective independence of every stage makes this
     exactly the per-``i`` slice of the original doc-wide pass.
     ``cands_raw`` lets the caller reuse an already-extracted candidate
-    list (the sort here canonicalizes order either way)."""
+    list (the sort here canonicalizes order either way).
+
+    Precondition: each syntax tree is a pure function of its sentence's
+    text, as every parse-memo caller's is.  The D2 memo keys on the text,
+    not the tree, so trees built elsewhere for identical text would be
+    served another tree's accepted connectives."""
     if cands_raw is None:
         cands_raw = extract_connective_candidates(filtered[i]["tokens"])
     cands = sorted(cands_raw, key=lambda x: x["connective"])
@@ -970,38 +967,35 @@ def _sentence_connective_rows(filtered, sentences, para_eventualities,
 # connective sentence's predecessor was eventuality-empty (EMPTY_SENT
 # replacement changes D5's clause source).  Rows reference content-hashed
 # eids only, so cached values are position- and paragraph-portable.
-import os as _os
-import threading as _threading
-
-_PAIR_MEMO: dict = {}
-_PAIR_MEMO_MAX = 1 << 16
-# text -> connective-candidate list (pure function of tokens; entries are
-# read-only downstream).  Unlike the pair memo this is ALWAYS on: keys are
-# single sentences (high hit rate under Zipf even across conversations)
-# and the value build is the scan itself, so there is no lose regime.
-_CAND_MEMO: dict = {}
-_CAND_MEMO_MAX = 1 << 16
-# Guards insert/eviction across the serving daemon's handler threads (the
-# only regime with the memo ON + concurrency).  Values are write-once and
-# immutable, so unlocked `get` is safe; the lock keeps the
-# clear-when-full / set pair atomic so one thread's eviction can't race
-# another's insert into a dict it believes has room.
-_PAIR_MEMO_LOCK = _threading.Lock()
 # DEFAULT OFF: measured on the Spark batch path (5k convs, local[8],
 # 3 reps/arm) the memo is 15-26% SLOWER — pair diversity across 25k
 # conversations plus task-to-worker drift defeats the cache while the
 # key build taxes every miss.  It wins 6x (3.4s -> 0.53s warm on the
 # 12k-turn profile) when the SAME paragraphs recur in one process —
 # the serving-daemon regime, which switches it on at startup.
-_PAIR_MEMO_ON = _os.environ.get("ASER_PAIR_MEMO", "0") != "0"
+_pair_memo_on = False
 
 
 def set_pair_memo(on: bool) -> None:
     """Opt the current process in/out of the relation-pass pair memo."""
-    global _PAIR_MEMO_ON
-    _PAIR_MEMO_ON = bool(on)
+    global _pair_memo_on
+    _pair_memo_on = bool(on)
     if not on:
-        _PAIR_MEMO.clear()
+        _memo.PAIRS.clear()
+
+
+def _connective_candidates(tokens):
+    """``extract_connective_candidates`` memoized by token tuple.  Unlike
+    the pair memo this is ALWAYS on: keys are single sentences (high hit
+    rate under Zipf even across conversations) and the value build is the
+    scan itself, so there is no lose regime.  Consumers never mutate the
+    candidate dicts."""
+    key = tuple(tokens)
+    cands = _memo.CANDIDATES.get(key)
+    if cands is None:
+        cands = extract_connective_candidates(tokens)
+        _memo.CANDIDATES.put(key, cands)
+    return cands
 
 
 def extract_paragraph_relations_discourse(sentences, para_eventualities,
@@ -1049,23 +1043,13 @@ def extract_paragraph_relations_discourse(sentences, para_eventualities,
         else:
             filtered.append(EMPTY_SENT_PARSED)
 
-    # dep-method reads raw parses; ASER_PAIR_MEMO=0 is the A/B control
-    memoizable = _PAIR_MEMO_ON and method.lower() != "discourse"
+    # dep-method reads raw parses
+    memoizable = _pair_memo_on and method.lower() != "discourse"
     for i in range(start, stop):
         sp = filtered[i]
         if not sp["tokens"]:
             continue
-        # candidate scan is a pure function of the token list; Zipf-hot
-        # sentences recur, so memo by token tuple (consumers never mutate
-        # the candidate dicts — _sentence_connective_rows copies fields out)
-        ck = tuple(sp["tokens"])
-        cands_raw = _CAND_MEMO.get(ck)
-        if cands_raw is None:
-            cands_raw = extract_connective_candidates(sp["tokens"])
-            with _PAIR_MEMO_LOCK:  # atomic evict+insert (daemon threads)
-                if len(_CAND_MEMO) >= _CAND_MEMO_MAX:
-                    _CAND_MEMO.clear()
-                _CAND_MEMO[ck] = cands_raw
+        cands_raw = _connective_candidates(sp["tokens"])
         if not cands_raw:
             continue  # no connective -> no rows; skip key build entirely
         if not memoizable:
@@ -1086,15 +1070,12 @@ def extract_paragraph_relations_discourse(sentences, para_eventualities,
             method,
             threshold,
         )
-        hit = _PAIR_MEMO.get(key)
+        hit = _memo.PAIRS.get(key)
         if hit is None:
             hit = _sentence_connective_rows(
                 filtered, sentences, para_eventualities, syntax_trees, i,
                 models, method, threshold, cands_raw=cands_raw)
-            with _PAIR_MEMO_LOCK:
-                if len(_PAIR_MEMO) >= _PAIR_MEMO_MAX:
-                    _PAIR_MEMO.clear()
-                _PAIR_MEMO[key] = hit
+            _memo.PAIRS.put(key, hit)
         rows.extend(hit)
     return rows
 
@@ -1622,16 +1603,9 @@ def sentence_connective_separators(tokens, pos_tags, syntax_tree,
                     "lemmas": [next_ctx[0]], "dependencies": []})
 
     models = load_discourse_models()
-    ck = tuple(tokens)
-    cands = _CAND_MEMO.get(ck)
-    if cands is None:
-        cands = extract_connective_candidates(tokens)
-        with _PAIR_MEMO_LOCK:  # atomic evict+insert (daemon threads)
-            if len(_CAND_MEMO) >= _CAND_MEMO_MAX:
-                _CAND_MEMO.clear()
-            _CAND_MEMO[ck] = cands
     sep = set()
-    for c in sorted(cands, key=lambda x: x["connective"]):
+    for c in sorted(_connective_candidates(tokens),
+                    key=lambda x: x["connective"]):
         strings = connective_feature_strings(doc, sent_idx, c["indices"],
                                              syntax_tree)
         if models.is_connective(strings):

@@ -54,14 +54,19 @@ def _compile_prefilters():
 
     Both checks reject only candidates ``_run_program`` would itself reject
     (hit=False on a positive op -> None), so match results are identical —
-    the tottime just stops being dominated by trivially failing programs."""
+    the tottime just stops being dominated by trivially failing programs.
+    Both invariants raise ValueError, so they hold under ``python -O``."""
     pf = {}
     for name, prog in PATTERN_PROGRAMS.items():
         labels: set = set()
         for op in prog.positive:
-            assert len(op.labels) == 1, (name, op)
+            if len(op.labels) != 1:
+                raise ValueError(f"{name}: positive op {op} needs one label")
             labels |= op.labels
         first = prog.positive[0]
+        if first.anchor != "V1":
+            raise ValueError(f"{name}: first positive op {first} must "
+                             "anchor on V1")
         pf[name] = (frozenset(labels), first.kind,
                     next(iter(first.labels)))
     return pf

@@ -21,6 +21,7 @@ Scale design
 
 from __future__ import annotations
 
+from ..kernel import memo as _memo
 from ..schemas import (EVENTUALITY_INSTANCE_SCHEMA, INSTANCE_SCHEMA,
                        RELATION_INSTANCE_SCHEMA)
 
@@ -29,72 +30,35 @@ _REL_COLS = [f.name for f in RELATION_INSTANCE_SCHEMA.fields]
 _INST_COLS = [f.name for f in INSTANCE_SCHEMA.fields]
 
 
-def _evict_sentence_memos(modes) -> None:
-    """Shared eviction path: drop the given modes' memos, make the frozen
-    objects collectable again, collect, and return the freed arenas to the
-    OS.  The malloc_trim matters as much as the collect — the observed
-    damage is resident-heap/allocator state, not reachable garbage
-    (BENCH/NOTES.md §r6)."""
-    import ctypes
-    import gc
+def release_extraction_memory(spark=None) -> None:
+    """Drop the per-worker memo state (``kernel/memo.py`` ``reset``) — in
+    the reused python workers when a SparkSession is given (via a tiny
+    flush job that cycles the worker pool), else in the calling process.
 
-    dropped = False
-    for m in list(modes):
-        if m in _SENT_MEMOS:
-            del _SENT_MEMOS[m]
-            _MEMO_GEN.pop(m, None)
-            dropped = True
-    if not dropped:
-        return
-    gc.unfreeze()    # frozen memo objects become collectable again
-    _GC_TUNED.clear()  # next _freeze_longlived() re-freezes survivors
-    gc.collect()
-    try:
-        ctypes.CDLL("libc.so.6").malloc_trim(0)
-    except OSError:
-        pass
+    After an extraction stage's output is materialized, the workers'
+    resident memos (100-400MB each in discourse mode) are pure liability:
+    at sf0.1 local[32] the JVM aggregations right after a discourse
+    extract read 21-30s against a 2.5s healthy cost (BENCH/NOTES.md §r7).
+    Call this between an extraction stage and unrelated downstream
+    stages; bench.py calls it per rep.
 
-
-def release_extraction_memory(spark=None, n_tasks: int | None = None) -> None:
-    """Release the per-worker sentence-memo state (ALL modes) and return
-    the freed memory to the OS — in the reused python workers when a
-    SparkSession is given (via a tiny flush job that cycles the worker
-    pool), else in the calling process.
-
-    Why this exists: after an extraction stage's output is materialized,
-    the workers' resident memo state (up to 100-400MB each in discourse
-    mode — parse trees, separator tables) is pure liability.  Measured at
-    sf0.1 local[32]: the JVM aggregations right after a discourse extract
-    read 21-30s against a 2.5s healthy cost, and a warm same-mode rerun
-    of the extract itself read ~117s against 9.4s in fresh workers, with
-    every flanking JVM calib healthy — the resident worker heaps are the
-    slowdown, exactly the r6 cross-mode mechanism but within one mode.
-    A pipeline should call this between an extraction stage and unrelated
-    downstream stages; bench.py calls it per rep.
-
-    The flush job is best-effort: Spark hands tasks to idle pool workers,
-    so ``n_tasks`` (default 4x defaultParallelism) cycles the pool several
-    times over; a missed worker just keeps its memo (correctness is
-    unaffected — the memo is a pure-function cache)."""
+    The flush job is best-effort: its 4x defaultParallelism tasks cycle
+    the idle worker pool several times over, and a missed worker just
+    keeps its memo (a pure-function cache, so output is unaffected)."""
     if spark is None:
-        _evict_sentence_memos(list(_SENT_MEMOS))
+        _memo.reset()
         return
     import pandas as pd
 
-    sc = spark.sparkContext
-    if n_tasks is None:
-        n_tasks = sc.defaultParallelism * 4
+    n_tasks = spark.sparkContext.defaultParallelism * 4
 
     def flush(batches):
-        # resolve the module globals at RUNTIME (inside the worker): a
-        # direct reference would make cloudpickle serialize _SENT_MEMOS by
-        # value with the closure — unpicklable lru_cache state — whenever
-        # the DRIVER process also holds memos (e.g. after driver-side
-        # kernel use in tests/serving)
-        from aser_spark.pipeline import extract as _ex
+        # import inside the worker: a captured Memo would be pickled by
+        # value with the closure, and its lock does not pickle
+        from aser_spark.kernel import memo
 
-        _ex._evict_sentence_memos(list(_ex._SENT_MEMOS))
-        for b in batches:
+        memo.reset()
+        for _ in batches:
             pass
         yield pd.DataFrame({"ok": [1]})
 
@@ -103,124 +67,101 @@ def release_extraction_memory(spark=None, n_tasks: int | None = None) -> None:
 
 
 def _sentence_cache(mode: str = "seed", generation=None):
-    """Per-worker memo of sentence -> (parsed, eventualities).
+    """The per-worker memoized sentence kernel for ``mode``:
+    ``f(sentence) -> (parsed, eventualities)`` in seed mode, and
+    ``f(sentence, prev_ctx, next_ctx) -> (parsed, eventualities, tree)``
+    plus ``f.parse(sentence) -> (parsed, tree)`` in discourse mode.
 
     ``mode='discourse'`` runs the v2.0 path instead: connective candidate
     scan -> clause split (constituency SBAR + separators) -> per-clause
     seed-rule re-extraction (kernel/discourse.py) — clause-level recall
     where the seed path's skip-word filter drops whole sentences.
 
-    Transcript corpora are Zipf-skewed: a handful of head sentences ("i am
-    hungry.") recur millions of times, and parse+extract is a pure function
-    of the sentence text.  The reference exploits the same idea with its
-    per-paragraph syntax_tree_cache (/root/reference/aser/extract/
-    eventuality_extractor.py:614); here the cache lives for the python
-    worker's lifetime (workers are reused across tasks), so every hot
-    sentence is parsed once per worker instead of once per occurrence.
+    Parse+extract is a pure function of the sentence text, so every
+    Zipf-hot sentence is parsed once per worker instead of once per
+    occurrence (memo state: kernel/memo.py).  Cached parsed dicts /
+    eventuality records are SHARED — downstream code only reads them.
 
-    Contract: cached parsed dicts / eventuality records are SHARED —
-    downstream code must treat them as frozen (it does: rows are built by
-    reading fields only).
+    One ``(mode, generation)`` is resident at a time: a mode switch, or a
+    ``generation`` different from the resident one, resets every memo
+    first.  A worker still holding a prior mode's memos ran the next
+    mode's kernel 4-8x slower (31-68s vs 8.5s, BENCH/NOTES.md §r6), and a
+    warm same-mode rerun ~117s vs 9.4s (§r7), so repeated runs pass a new
+    generation to start in the fresh-worker regime.  ``None`` (default)
+    never forces a reset."""
+    global _resident
+    if _resident is not None and (
+            _resident[0] != mode or generation not in (None, _resident[1])):
+        _memo.reset()
+        _resident = None
+    if _resident is None:
+        _resident = (mode, generation)
+    return _discourse_sentence if mode == "discourse" else _seed_sentence
 
-    One mode resident at a time: switching modes EVICTS the other mode's
-    memos, unfreezes + collects them, and returns the freed arenas to the
-    OS (malloc_trim).  A reused worker whose heap still holds a prior
-    mode's memo state ran the next mode's kernel 4-8x slower on pure CPU
-    (sf0.1 discourse after seed: 31-68s vs 8.5s in fresh workers;
-    python-cpu 666s vs ~200s for identical work) — heap-locality damage
-    from the resident state, not cyclic GC (a per-mode re-freeze alone
-    did not recover it; eviction + trim does, measured back to 8.4s).
-    Full forensics: BENCH/NOTES.md §r6.  Rebuilding an evicted memo later
-    costs seconds; mixed-mode pipelines alternate per STAGE, not per
-    task, so thrash is bounded by the number of mode switches.
 
-    ``generation``: SAME-mode eviction trigger (r7).  The damage above is
-    resident state, not mode mismatch — a warm same-mode RERUN of the
-    sf0.1 discourse extract measured ~117s vs 9.4s in fresh workers
-    (healthy flanking calibs both times).  Passing a generation value
-    different from the one the memo was built under evicts and rebuilds
-    it at task start, so repeated runs (bench reps, multi-batch
-    pipelines) each start in the fresh-worker regime.  None (default)
-    never forces eviction."""
-    fresh = (generation is not None
-             and mode in _SENT_MEMOS and _MEMO_GEN.get(mode) != generation)
-    if mode not in _SENT_MEMOS or fresh:
-        stale = [m for m in _SENT_MEMOS if m != mode]
-        if fresh:
-            stale.append(mode)
-        _evict_sentence_memos(stale)
-        from functools import lru_cache
+_resident = None  # the (mode, generation) the memos were filled under
 
+
+def _seed_sentence(sentence: str):
+    hit = _memo.SEED_SENTENCES.get(sentence)
+    if hit is None:
         from ..kernel import extract_sentence_eventualities
         from ..nlp import parse_sentence
 
-        import os
-        _sz = int(os.environ.get("ASER_MEMO_SCALE_PCT", "100"))
-
-        def _scaled(base):
-            return max(base * _sz // 100, 1024)
-
-        if mode == "discourse":
-            from ..kernel.discourse import (
-                _sentence_clause_eventualities,
-                sentence_connective_separators)
-            from ..nlp.syntax import SyntaxTree
-
-            @lru_cache(maxsize=_scaled(16384))
-            def parse_one(sentence: str):
-                # render_parse=False: the kernel consumes the tree object,
-                # never the PTB bracket string — skip rendering it
-                p, root = parse_sentence(sentence, with_tree=True,
-                                         render_parse=False)
-                return p, SyntaxTree.from_root(root)
-
-            # two-level memo: ctx = (token, pos_tag) adjacent to this
-            # sentence in the conversation (or None at the edges) is the
-            # ONLY document state the D2 connective classifier can see
-            # (one-token boundary leak, kernel/discourse.py), so
-            # (sentence, ctx) exactly keys the SEPARATOR decision — while
-            # the expensive clause re-extraction depends only on
-            # (sentence, separators), a far lower-cardinality key that
-            # collapses the many contexts yielding identical separators.
-            @lru_cache(maxsize=_scaled(65536))
-            def seps_one(sentence: str, prev_ctx, next_ctx):
-                p, tree = parse_one(sentence)
-                return sentence_connective_separators(
-                    p["tokens"], p["pos_tags"], tree, prev_ctx, next_ctx)
-
-            @lru_cache(maxsize=_scaled(16384))
-            def clause_evs(sentence: str, sep: tuple):
-                p, tree = parse_one(sentence)
-                return _sentence_clause_eventualities(
-                    p["tokens"], p["lemmas"], p["pos_tags"],
-                    p["dependencies"], tree, set(sep),
-                    ners=p.get("ners"), mentions=p.get("mentions"))
-
-            def one(sentence: str, prev_ctx=None, next_ctx=None):
-                p, tree = parse_one(sentence)
-                sep = seps_one(sentence, prev_ctx, next_ctx)
-                return p, clause_evs(sentence, sep), tree
-
-            one.parse = parse_one
-        else:
-            @lru_cache(maxsize=_scaled(8192))
-            def one(sentence: str):
-                # render_parse=False: seed extraction reads tokens/lemmas/
-                # pos/deps only — skip the constituency build + PTB render
-                # (~20% of a seed parse)
-                p = parse_sentence(sentence, render_parse=False)
-                evs = extract_sentence_eventualities(
-                    p["tokens"], p["lemmas"], p["pos_tags"], p["dependencies"],
-                    ners=p.get("ners"), mentions=p.get("mentions"))
-                return p, evs
-
-        _SENT_MEMOS[mode] = one
-        _MEMO_GEN[mode] = generation
-    return _SENT_MEMOS[mode]
+        # render_parse=False: seed extraction reads tokens/lemmas/pos/deps
+        # only — skip the constituency build + PTB render (~20% of a parse)
+        p = parse_sentence(sentence, render_parse=False)
+        hit = (p, extract_sentence_eventualities(
+            p["tokens"], p["lemmas"], p["pos_tags"], p["dependencies"],
+            ners=p.get("ners"), mentions=p.get("mentions")))
+        _memo.SEED_SENTENCES.put(sentence, hit)
+    return hit
 
 
-_SENT_MEMOS: dict = {}
-_MEMO_GEN: dict = {}
+def _discourse_parse(sentence: str):
+    hit = _memo.PARSES.get(sentence)
+    if hit is None:
+        from ..nlp import parse_sentence
+        from ..nlp.syntax import SyntaxTree
+
+        # render_parse=False: the kernel consumes the tree object, never
+        # the PTB bracket string — skip rendering it
+        p, root = parse_sentence(sentence, with_tree=True, render_parse=False)
+        hit = (p, SyntaxTree.from_root(root))
+        _memo.PARSES.put(sentence, hit)
+    return hit
+
+
+def _discourse_sentence(sentence: str, prev_ctx=None, next_ctx=None):
+    # two-level memo: ctx = (token, pos_tag) adjacent to this sentence in
+    # the conversation (or None at the edges) is the ONLY document state
+    # the D2 connective classifier can see (one-token boundary leak,
+    # kernel/discourse.py), so (sentence, ctx) exactly keys the SEPARATOR
+    # decision — while the expensive clause re-extraction depends only on
+    # (sentence, separators), a far lower-cardinality key that collapses
+    # the many contexts yielding identical separators.
+    p, tree = _discourse_parse(sentence)
+    key = (sentence, prev_ctx, next_ctx)
+    sep = _memo.SEPARATORS.get(key)
+    if sep is None:
+        from ..kernel.discourse import sentence_connective_separators
+
+        sep = sentence_connective_separators(
+            p["tokens"], p["pos_tags"], tree, prev_ctx, next_ctx)
+        _memo.SEPARATORS.put(key, sep)
+    key = (sentence, sep)
+    evs = _memo.CLAUSES.get(key)
+    if evs is None:
+        from ..kernel.discourse import _sentence_clause_eventualities
+
+        evs = _sentence_clause_eventualities(
+            p["tokens"], p["lemmas"], p["pos_tags"], p["dependencies"], tree,
+            set(sep), ners=p.get("ners"), mentions=p.get("mentions"))
+        _memo.CLAUSES.put(key, evs)
+    return p, evs, tree
+
+
+_discourse_sentence.parse = _discourse_parse
 
 
 def _ev_record_to_row(conv_id, turn_idx, sent_idx, e):
@@ -342,41 +283,6 @@ def _arrow_frame(rows, arrow_schema):
     return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
 
-_GC_TUNED: set = set()
-
-
-def _freeze_longlived(mode: str = "seed"):
-    """Take the worker's long-lived objects (sentence memos, compiled
-    classifier tables — millions of small objects that survive for the
-    worker's lifetime) out of the cyclic GC's frequent-scan path.  Reused
-    python workers otherwise pay gen2 collections repeatedly inside every
-    allocation-heavy extraction task.
-
-    Freeze runs once per worker per MODE (collect first, so no garbage is
-    frozen).  Once-per-worker was not enough: the first task freezes an
-    EMPTY state, so everything the seed stage then builds (a 16k-entry
-    parse LRU whose values are node trees + leaf-index caches) stays in
-    gen2 unfrozen, and a later discourse stage's allocation bursts scan
-    those millions of objects on every gen2 collection — measured 4-8x
-    on the full sf0.1 discourse stage in REUSED workers (31-68s) vs
-    fresh workers (8.5s), reproducible with spark.python.worker.reuse
-    on/off (BENCH/NOTES.md §r6).  Re-freezing at the first task of the
-    NEXT mode captures the prior mode's resident memos.  Bounded leak:
-    entries evicted from a frozen LRU after a mode switch stay
-    unreclaimed, capped by the LRU sizes at the (at most two) freeze
-    points, not by corpus churn."""
-    global _GC_TUNED
-    if mode in _GC_TUNED:
-        return
-    import gc
-
-    gc.collect()
-    gc.freeze()
-    if not _GC_TUNED:
-        gc.set_threshold(50_000, 25, 50)
-    _GC_TUNED.add(mode)
-
-
 def _group_by_conv(df, num_partitions=None):
     """Hash-repartition by conv_id with an EXPLICIT partition count.
 
@@ -409,7 +315,7 @@ def extract_relations(parsed, num_partitions=None):
         from ..kernel import (extract_paragraph_relations,
                               extract_sentence_eventualities)
 
-        _freeze_longlived()
+        _memo.freeze_once()
         out = []
         for conv_id, rows in _conversation_stream(batches, cols):
             sentences, para_evs = [], []
@@ -590,10 +496,10 @@ def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(INSTANCE_SCHEMA)
-        # evicts a stale mode — and, under a new memo_generation, this
-        # mode's own resident memo — FIRST
+        # resets a stale mode's — or, under a new memo_generation, this
+        # mode's own — memos FIRST, then freezes what survives
         memo = _sentence_cache(mode, memo_generation)
-        _freeze_longlived(mode)  # then freeze the survivors + new tables
+        _memo.freeze_once()
         out = []
         for conv_id, rows in _conversation_stream_arrow(batches, cols):
             out.extend(conversation_instance_rows(conv_id, rows, memo, mode))
@@ -615,8 +521,8 @@ def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(INSTANCE_SCHEMA)
-        memo = _sentence_cache(mode, memo_generation)  # evict stale FIRST
-        _freeze_longlived(mode)  # then freeze the survivors + new tables
+        memo = _sentence_cache(mode, memo_generation)  # reset stale FIRST
+        _memo.freeze_once()
         out = []
         chunk_cols = ["rk", "turn_idx", "text"]
         for gkey, rows in _conversation_stream_arrow(batches, chunk_cols,
@@ -752,8 +658,8 @@ def parse_coverage(transcripts):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(_coverage_struct())
-        _freeze_longlived()
         memo = _sentence_cache("seed")
+        _memo.freeze_once()
         for rb in batches:
             out = []
             for conv_id, turn_idx, text in zip(

@@ -103,17 +103,21 @@ def test_pair_memo_rows_identical(paragraphs):
     regime) must be row-identical to the memo-off batch path on
     arbitrary held-out text — run twice with memo on so the second pass
     exercises cache HITS."""
-    from aser_spark.kernel.discourse import _PAIR_MEMO, set_pair_memo
+    from aser_spark.kernel import memo
+    from aser_spark.kernel.discourse import set_pair_memo
 
     sample = paragraphs[:30]
     try:
         set_pair_memo(False)
         off = _all_rows(sample, "discourse")
         set_pair_memo(True)
-        _PAIR_MEMO.clear()
+        memo.reset()
         on_cold = _all_rows(sample, "discourse")
+        cold = (memo.PAIRS.hits, memo.PAIRS.misses)
         on_warm = _all_rows(sample, "discourse")
-        assert _PAIR_MEMO, "memo never populated"
+        assert memo.PAIRS.misses > 0, "memo never populated"
+        assert memo.PAIRS.hits > cold[0], "warm pass never hit the memo"
+        assert memo.PAIRS.misses == cold[1], "warm pass missed the memo"
     finally:
         set_pair_memo(False)
     assert off == on_cold == on_warm

@@ -245,3 +245,57 @@ def test_pattern_prefilter_is_sound_vs_unfiltered_matcher():
                                               key=lambda e: e["position"])]
                 n_checked += 1
     assert n_checked > 500
+
+
+@pytest.mark.parametrize("op, msg", [
+    (("V1", frozenset({"nsubj", "nsubjpass"}), "S1"), "needs one label"),
+    (("S1", frozenset({"nsubj"}), "X1"), "must anchor on V1"),
+])
+def test_pattern_prefilter_rejects_unsound_program(monkeypatch, op, msg):
+    """Both prefilter soundness invariants are real checks (they must
+    survive ``python -O``): a multi-label positive op, or a first
+    positive op not anchored on V1, is refused at compile time."""
+    from aser_spark.kernel import extractor
+    from aser_spark.kernel.patterns import BIND, Op, PatternProgram
+
+    anchor, labels, var = op
+    bad = PatternProgram("bad", (Op(BIND, anchor, labels, var, False),),
+                         (), ())
+    monkeypatch.setattr(extractor, "PATTERN_PROGRAMS", {"bad": bad})
+    with pytest.raises(ValueError, match=msg):
+        extractor._compile_prefilters()
+
+
+def test_memo_is_a_bounded_lru_across_threads():
+    """The one worker-memo type: least-recently-USED eviction (a hit
+    refreshes an entry), hit/miss counters, and no growth past its bound
+    while threads look up, insert and evict concurrently."""
+    import threading
+
+    from aser_spark.kernel.memo import Memo
+
+    m = Memo("t", 3)
+    for k in "abc":
+        m.put(k, k.upper())
+    assert m.get("a") == "A"  # refresh: "b" is now least recent
+    m.put("d", "D")
+    assert m.get("b") is None and m.get("c") == "C"
+    assert (m.hits, m.misses, len(m)) == (2, 1, 3)
+
+    shared = Memo("u", 64)
+
+    def work(seed):
+        for i in range(20_000):
+            k = (seed * 31 + i * 7) % 256
+            v = shared.get(k)
+            if v is None:
+                shared.put(k, (k,))
+            else:
+                assert v == (k,)
+
+    threads = [threading.Thread(target=work, args=(s,)) for s in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert 0 < len(shared) <= 64

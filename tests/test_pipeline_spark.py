@@ -227,15 +227,18 @@ def test_merge_into_kg_matches_full_build(spark, transcripts):
 @pytest.mark.parametrize("mode", ["seed", "discourse"])
 def test_memo_generation_and_release_identical_rows(spark, transcripts, mode):
     """The r7 worker-memory controls are pure memory management: bumping
-    memo_generation (same-mode evict at task start) and running the
+    memo_generation (same-mode reset at task start) and running the
     release_extraction_memory flush job between runs must leave the
-    extraction output byte-identical."""
+    extraction output byte-identical — and a release or a mode switch
+    must leave no memo resident."""
+    from aser_spark.kernel import memo
     from aser_spark.pipeline.extract import (_sentence_cache,
+                                             conversation_instance_rows,
                                              extract_graph_instances,
                                              release_extraction_memory)
 
     # populate a DRIVER-side memo first: the flush closure must not
-    # capture _SENT_MEMOS by value (unpicklable lru_cache state) — the
+    # capture a memo by value (its lock does not pickle) — the
     # regression only surfaced when the driver process also held memos
     _sentence_cache(mode)("the dog sees the cat.")
 
@@ -252,6 +255,15 @@ def test_memo_generation_and_release_identical_rows(spark, transcripts, mode):
     # driver-side flush path too (covers the spark=None branch)
     release_extraction_memory()
     assert base == gen1 == gen2
+    assert {m.name: len(m) for m in memo.MEMOS if len(m)} == {}
+
+    # a mode switch drops the discourse relation-pass memos as well
+    conversation_instance_rows(
+        "c", [(0, "i stayed home because it was raining."),
+              (1, "so we watched a movie.")], mode="discourse")
+    assert len(memo.D2) and len(memo.CANDIDATES)
+    _sentence_cache("seed")
+    assert {m.name: len(m) for m in memo.MEMOS if len(m)} == {}
 
 
 def test_merge_lineage_matches_full_build(spark, transcripts):
