@@ -3,12 +3,14 @@ engine with the query/data-processing capabilities of HKUST-KnowComp/ASER.
 
 The reference (read-only at /root/reference) is a single-node Python
 multiprocessing pipeline; this package re-expresses every stage as Spark
-DataFrame transformations plus a small number of Arrow-batched pandas UDFs:
+DataFrame transformations plus a small number of Arrow-batched Python UDFs:
 
     transcripts (conv_id, turn_idx, role, text, tool, ts)
-        -> parse            (mapInPandas; deterministic dependency parser)
-        -> eventualities    (mapInPandas; ASER syntactic patterns, SURVEY §2.3)
-        -> relations        (window/lead pairing + connective senses, §2.4/§2.10-D7)
+        -> one fused mapInArrow pass per conversation (pipeline/extract.py):
+             parse          (deterministic dependency parser)
+             eventualities  (ASER syntactic patterns, SURVEY §2.3)
+             relations      (adjacent-sentence pairing + connective senses,
+                             §2.4/§2.10-D7)
         -> salted aggregation -> nodes/edges graph tables  (§2.5 A1/A2)
         -> core-KG filters + dangling-edge semi-join        (F6/J4)
 

@@ -1,5 +1,4 @@
-from .parse import parse_transcripts
-from .extract import extract_eventualities, extract_graph_instances, extract_relations
+from .extract import extract_graph_instances
 from .aggregate import aggregate_edges, aggregate_nodes, build_lineage
 from .graph import (build_core_kg, build_knowledge_graph, edges_wide,
                     merge_into_kg, merge_lineage)

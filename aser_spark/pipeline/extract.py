@@ -1,33 +1,28 @@
-"""Extraction operators: eventualities (P1-P3/F3-F5), relations (J1/J2/D7),
-and the fused single-pass graph-instance extractor.
+"""Extraction: the fused single-pass graph-instance extractor —
+tokenize/parse, eventualities (P1-P3/F3-F5) and relations (J1/J2/D7) in
+one UDF — plus the per-sentence parse-coverage table.
 
 Scale design
 ------------
-* ``extract_eventualities`` is per-sentence -> pure ``mapInPandas``
-  flatMap, NO shuffle.
 * relations need whole-conversation context (adjacent-sentence pairing J2 +
   connective windows), so the conversation is the group.  Instead of
   ``groupBy(conv_id).applyInPandas`` (one pandas DataFrame per tiny group —
   per-group overhead dominates at 10^11 conversations) we do ONE hash
-  repartition by conv_id + sortWithinPartitions, then stream Arrow batches
-  through ``mapInPandas`` with a boundary-carry buffer: whole batches are
-  processed vectorially and only the conversation straddling a batch edge is
-  deferred.  One shuffle total, and it is the unavoidable one.
-* ``extract_graph_instances`` fuses parse + eventualities + relations in
-  that single pass so each turn is parsed exactly once; output is the
-  unified INSTANCE_SCHEMA (kind='node'|'edge'), splittable by a cheap
-  filter downstream.
+  repartition by conv_id + sortWithinPartitions, then stream Arrow record
+  batches through ``mapInArrow`` with a boundary-carry buffer: whole
+  batches are processed in order and only the conversation straddling a
+  batch edge is deferred.  One shuffle total, and it is the unavoidable
+  one (none at all for ``pre_grouped`` input).
+* ``extract_graph_instances`` parses each turn exactly once and runs the
+  eventuality and relation kernels on that parse; output is the unified
+  INSTANCE_SCHEMA (kind='node'|'edge'), splittable by a cheap filter
+  downstream.
 """
 
 from __future__ import annotations
 
 from ..kernel import memo as _memo
-from ..schemas import (EVENTUALITY_INSTANCE_SCHEMA, INSTANCE_SCHEMA,
-                       RELATION_INSTANCE_SCHEMA)
-
-_EV_COLS = [f.name for f in EVENTUALITY_INSTANCE_SCHEMA.fields]
-_REL_COLS = [f.name for f in RELATION_INSTANCE_SCHEMA.fields]
-_INST_COLS = [f.name for f in INSTANCE_SCHEMA.fields]
+from ..schemas import INSTANCE_SCHEMA
 
 
 def release_extraction_memory(spark=None) -> None:
@@ -48,11 +43,11 @@ def release_extraction_memory(spark=None) -> None:
     if spark is None:
         _memo.reset()
         return
-    import pandas as pd
-
     n_tasks = spark.sparkContext.defaultParallelism * 4
 
     def flush(batches):
+        import pyarrow as pa
+
         # import inside the worker: a captured Memo would be pickled by
         # value with the closure, and its lock does not pickle
         from aser_spark.kernel import memo
@@ -60,10 +55,10 @@ def release_extraction_memory(spark=None) -> None:
         memo.reset()
         for _ in batches:
             pass
-        yield pd.DataFrame({"ok": [1]})
+        yield pa.record_batch([pa.array([1], pa.int32())], names=["ok"])
 
     (spark.range(0, n_tasks, 1, n_tasks)
-     .mapInPandas(flush, schema="ok int").count())
+     .mapInArrow(flush, schema="ok int").count())
 
 
 def _sentence_cache(mode: str = "seed", generation=None):
@@ -164,86 +159,14 @@ def _discourse_sentence(sentence: str, prev_ctx=None, next_ctx=None):
 _discourse_sentence.parse = _discourse_parse
 
 
-def _ev_record_to_row(conv_id, turn_idx, sent_idx, e):
-    return (
-        conv_id, turn_idx, sent_idx, e["eid"], e["pattern"], e["words"],
-        e["pos_tags"], [tuple(d) for d in e["dependencies"]],
-        e["skeleton_word_indices"], e["verb_indices"], e["position"],
-        e["frequency"],
-    )
-
-
-def extract_eventualities(parsed):
-    """parsed sentences -> eventuality instance rows (no shuffle)."""
-    import pandas as pd
-
-    def run(batches):
-        from ..kernel import extract_sentence_eventualities
-
-        for pdf in batches:
-            out = []
-            for conv_id, turn_idx, sent_idx, tokens, lemmas, tags, deps in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["sent_idx"], pdf["tokens"],
-                pdf["lemmas"], pdf["pos_tags"], pdf["dependencies"],
-            ):
-                evs = extract_sentence_eventualities(
-                    list(tokens), list(lemmas), list(tags),
-                    [(int(d["gov"]), d["rel"], int(d["dep"])) for d in deps],
-                )
-                out.extend(
-                    _ev_record_to_row(conv_id, int(turn_idx), int(sent_idx), e)
-                    for e in evs
-                )
-            yield _frame(out, _EV_COLS)
-
-    return parsed.mapInPandas(run, schema=EVENTUALITY_INSTANCE_SCHEMA)
-
-
-def _conversation_stream(batches, columns, key_col="conv_id"):
-    """Group sorted Arrow batches into per-conversation row lists, carrying
-    the boundary conversation across batch edges.
-
-    Hot path: boundaries are found on the raw numpy id array and rows are
-    materialized via zip over .tolist() columns — ~5x cheaper than
-    pandas groupby + itertuples for many small groups."""
-    import numpy as np
-
-    carry_key, carry_rows = None, []
-    for pdf in batches:
-        n = len(pdf)
-        if n == 0:
-            continue
-        ids = pdf[key_col].to_numpy()
-        arrs = [pdf[c].tolist() for c in columns]
-        change = np.flatnonzero(ids[1:] != ids[:-1]) + 1
-        bounds = [0, *change.tolist(), n]
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            key = ids[s]
-            rows = list(zip(*(a[s:e] for a in arrs)))
-            if key == carry_key:
-                carry_rows.extend(rows)
-                continue
-            if carry_key is not None:
-                yield carry_key, carry_rows
-            carry_key, carry_rows = key, rows
-    if carry_key is not None:
-        yield carry_key, carry_rows
-
-
-def _frame(rows, columns):
-    """Columnar DataFrame construction (avoids per-cell object inference)."""
-    import pandas as pd
-
-    if not rows:
-        return pd.DataFrame({c: [] for c in columns})
-    return pd.DataFrame(dict(zip(columns, map(list, zip(*rows)))))
-
-
 def _conversation_stream_arrow(batches, columns, key_col="conv_id"):
-    """Arrow-native sibling of ``_conversation_stream`` for ``mapInArrow``
-    stages: consumes pyarrow RecordBatches instead of pandas frames.
-    Same boundary-carry contract; ``to_pylist`` is a single C call per
-    column versus pandas' block extraction + ``tolist``."""
+    """Group sorted pyarrow RecordBatches (a ``mapInArrow`` input) into
+    per-``key_col`` row lists of ``columns`` tuples, carrying the boundary
+    group across batch edges.
+
+    Hot path: boundaries are found on the id array with numpy and rows are
+    materialized via zip over ``to_pylist`` columns (one C call per column)
+    — far cheaper than a per-group frame for many small groups."""
     import numpy as np
 
     carry_key, carry_rows = None, []
@@ -283,57 +206,24 @@ def _arrow_frame(rows, arrow_schema):
     return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
 
-def _group_by_conv(df, num_partitions=None):
-    """Hash-repartition by conv_id with an EXPLICIT partition count.
+def _group_by_conv(df, num_partitions=None, key="conv_id"):
+    """Hash-repartition by ``key`` with an EXPLICIT partition count, each
+    partition sorted by (key, turn_idx).
 
     Critical at scale: without it, AQE coalesces this exchange by byte size
     (a few MB of text -> 1-2 partitions) and the downstream Python UDF stage
     — which is CPU-bound, not byte-bound — serializes onto a couple of
-    cores.  Explicit numPartitions pins the exchange.  Default = cores:
-    each Arrow-UDF task costs ~40ms in worker handshake alone, so
-    oversplitting a CPU-bound stage (the classic 2-3x rule for JVM stages)
-    measurably hurts; conversations hash uniformly, so straggler risk at 1x
-    is minimal.  Raise it for skewed real corpora."""
+    cores.  Explicit numPartitions pins the exchange.  Default =
+    ``max(defaultParallelism, 8)``: one task per core on hosts with 8 or
+    more cores, and at least two task waves on hosts with 4 or fewer.  Each
+    Arrow-UDF task costs ~40ms in worker handshake alone, so oversplitting
+    a CPU-bound stage (the classic 2-3x rule for JVM stages) measurably
+    hurts; conversations hash uniformly, so straggler risk at one task per
+    core is minimal.  Raise it for skewed real corpora."""
     if num_partitions is None:
         sc = df.sparkSession.sparkContext
         num_partitions = max(sc.defaultParallelism, 8)
-    cols = ["conv_id", "turn_idx"] + (["sent_idx"] if "sent_idx" in df.columns else [])
-    return df.repartition(num_partitions, "conv_id").sortWithinPartitions(*cols)
-
-
-def extract_relations(parsed, num_partitions=None):
-    """parsed sentences -> relation instance rows.
-
-    Re-runs the (cheap) eventuality kernel inside the conversation group so
-    this operator composes standalone; the fused path below shares the work.
-    """
-    import pandas as pd
-
-    cols = ["turn_idx", "sent_idx", "tokens", "lemmas", "pos_tags", "dependencies"]
-
-    def run(batches):
-        from ..kernel import (extract_paragraph_relations,
-                              extract_sentence_eventualities)
-
-        _memo.freeze_once()
-        out = []
-        for conv_id, rows in _conversation_stream(batches, cols):
-            sentences, para_evs = [], []
-            for turn_idx, sent_idx, tokens, lemmas, tags, deps in rows:
-                dep_t = [(int(d["gov"]), d["rel"], int(d["dep"])) for d in deps]
-                sentences.append({"tokens": list(tokens), "dependencies": dep_t})
-                para_evs.append(extract_sentence_eventualities(
-                    list(tokens), list(lemmas), list(tags), dep_t))
-            for hid, tid, sense, w in extract_paragraph_relations(sentences, para_evs):
-                out.append((conv_id, hid, tid, sense, w))
-            if len(out) >= 8192:
-                yield _frame(out, _REL_COLS)
-                out = []
-        yield _frame(out, _REL_COLS)
-
-    return _group_by_conv(parsed, num_partitions).mapInPandas(
-        run, schema=RELATION_INSTANCE_SCHEMA
-    )
+    return df.repartition(num_partitions, key).sortWithinPartitions(key, "turn_idx")
 
 
 def conversation_instance_rows(conv_id, turns, memo=None, mode="seed",
@@ -351,7 +241,7 @@ def conversation_instance_rows(conv_id, turns, memo=None, mode="seed",
     (kernel/relations.py + kernel/discourse.py ``window=``).
 
     This is the single source of truth for the fused extraction semantics:
-    the Spark ``mapInPandas`` stage below streams conversations through it,
+    the Spark ``mapInArrow`` stage below streams conversations through it,
     and the oracle stager (aser_spark/oracle_stage.py) drives the SAME
     function from plain Python to materialize the DuckDB-verifiable
     instances table — so the driver's oracle checks every downstream
@@ -490,43 +380,46 @@ def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
     """
     from pyspark.sql import functions as F
 
-    cols = ["turn_idx", "text"]
+    def emit(groups):
+        """The one ``mapInArrow`` body.  ``groups(batches)`` yields
+        ``(conv_id, turns, emit_turns)`` per grouping key; the memo
+        residency, the freeze and the 16384-row flush are shared."""
+        def run(batches):
+            from pyspark.sql.pandas.types import to_arrow_schema
 
-    def run_whole(batches):
-        from pyspark.sql.pandas.types import to_arrow_schema
+            arrow_schema = to_arrow_schema(INSTANCE_SCHEMA)
+            # resets a stale mode's — or, under a new memo_generation, this
+            # mode's own — memos FIRST, then freezes what survives
+            memo = _sentence_cache(mode, memo_generation)
+            _memo.freeze_once()
+            out = []
+            for conv_id, turns, emit_turns in groups(batches):
+                out.extend(conversation_instance_rows(
+                    conv_id, turns, memo, mode, emit_turns=emit_turns))
+                if len(out) >= 16384:
+                    yield _arrow_frame(out, arrow_schema)
+                    out = []
+            yield _arrow_frame(out, arrow_schema)
 
-        arrow_schema = to_arrow_schema(INSTANCE_SCHEMA)
-        # resets a stale mode's — or, under a new memo_generation, this
-        # mode's own — memos FIRST, then freezes what survives
-        memo = _sentence_cache(mode, memo_generation)
-        _memo.freeze_once()
-        out = []
-        for conv_id, rows in _conversation_stream_arrow(batches, cols):
-            out.extend(conversation_instance_rows(conv_id, rows, memo, mode))
-            if len(out) >= 16384:
-                yield _arrow_frame(out, arrow_schema)
-                out = []
-        yield _arrow_frame(out, arrow_schema)
+        return run
 
     narrow = transcripts.select("conv_id", "turn_idx", "text")
     if max_turns is None:
+        def whole(batches):
+            for conv_id, turns in _conversation_stream_arrow(
+                    batches, ["turn_idx", "text"]):
+                yield conv_id, turns, None
+
         grouped = narrow if pre_grouped else _group_by_conv(narrow, num_partitions)
-        return grouped.mapInArrow(run_whole, schema=INSTANCE_SCHEMA)
+        return grouped.mapInArrow(emit(whole), schema=INSTANCE_SCHEMA)
 
     m, k = int(max_turns), int(context_turns)
     if m <= 0 or k < 0 or k >= m:
         raise ValueError(f"need max_turns > context_turns >= 0, got {m}, {k}")
 
-    def run_chunks(batches):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(INSTANCE_SCHEMA)
-        memo = _sentence_cache(mode, memo_generation)  # reset stale FIRST
-        _memo.freeze_once()
-        out = []
-        chunk_cols = ["rk", "turn_idx", "text"]
-        for gkey, rows in _conversation_stream_arrow(batches, chunk_cols,
-                                                     key_col="gkey"):
+    def chunks(batches):
+        for gkey, rows in _conversation_stream_arrow(
+                batches, ["rk", "turn_idx", "text"], key_col="gkey"):
             conv_id, _, chunk = gkey.rpartition("\x00")
             lo = int(chunk) * m
             # core = ranks in [lo, lo+m); ranks map monotonically onto
@@ -537,13 +430,7 @@ def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
                 continue
             hi_t = next((t for r, t, _ in rows if r >= lo + m),
                         rows[-1][1] + 1)
-            out.extend(conversation_instance_rows(
-                conv_id, [(t, x) for _, t, x in rows], memo, mode,
-                emit_turns=(lo_t, hi_t)))
-            if len(out) >= 16384:
-                yield _arrow_frame(out, arrow_schema)
-                out = []
-        yield _arrow_frame(out, arrow_schema)
+            yield conv_id, [(t, x) for _, t, x in rows], (lo_t, hi_t)
 
     from pyspark.sql import Window
 
@@ -596,19 +483,13 @@ def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
                 .withColumn("gkey", F.concat_ws("\x00", F.col("conv_id"),
                                                 F.col("_t.c").cast("string")))
                 .select("gkey", "rk", "turn_idx", "text"))
-    if num_partitions is None:
-        sc = narrow.sparkSession.sparkContext
-        num_partitions = max(sc.defaultParallelism, 8)
-    grouped = (exploded.repartition(num_partitions, "gkey")
-               .sortWithinPartitions("gkey", "turn_idx"))
-    return grouped.mapInArrow(run_chunks, schema=INSTANCE_SCHEMA)
+    grouped = _group_by_conv(exploded, num_partitions, key="gkey")
+    return grouped.mapInArrow(emit(chunks), schema=INSTANCE_SCHEMA)
 
 
 COVERAGE_SCHEMA = ("conv_id string, turn_idx int, sent_idx int, "
                    "n_tokens int, pos_tags string, n_eventualities int, "
                    "covered boolean")
-_COV_COLS = ["conv_id", "turn_idx", "sent_idx", "n_tokens", "pos_tags",
-             "n_eventualities", "covered"]
 
 
 def _coverage_struct():
@@ -650,7 +531,7 @@ def turn_coverage_rows(conv_id, turn_idx, text, memo=None):
 def parse_coverage(transcripts):
     """Per-sentence grammar-coverage table over a transcript corpus:
     (conv_id, turn_idx, sent_idx, n_tokens, pos_tags, n_eventualities,
-    covered).  Shuffle-free ``mapInPandas`` (rows are independent per
+    covered).  Shuffle-free ``mapInArrow`` (rows are independent per
     turn — no cross-sentence context is needed for seed-mode coverage),
     memoized per worker like the extraction kernel.  The aggregate
     coverage fraction is one map-side-combining AVG over the output."""

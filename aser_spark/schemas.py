@@ -1,56 +1,12 @@
 """Explicit StructType schemas for every pipeline table.
 
 The reference keeps row dicts with conventional keys
-(/root/reference/aser/extract/utils.py:234-277 for parsed sentences,
-aser/database/kg_connection.py:13-27 for the KG tables); we pin real
+(aser/database/kg_connection.py:13-27 for the KG tables); we pin real
 columnar schemas so Parquet/Iceberg scans prune columns and Catalyst sees
 types.
 """
 
 from pyspark.sql import types as T
-
-DEP_EDGE = T.StructType([
-    T.StructField("gov", T.IntegerType(), False),
-    T.StructField("rel", T.StringType(), False),
-    T.StructField("dep", T.IntegerType(), False),
-])
-
-# one row per sentence; (conv_id, turn_idx, sent_idx) is the stable key the
-# reference emulates with its line-number sid (sentence_parser.py:96-99)
-PARSED_SENTENCE_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType(), False),
-    T.StructField("turn_idx", T.IntegerType(), False),
-    T.StructField("sent_idx", T.IntegerType(), False),
-    T.StructField("text", T.StringType(), False),
-    T.StructField("tokens", T.ArrayType(T.StringType()), False),
-    T.StructField("lemmas", T.ArrayType(T.StringType()), False),
-    T.StructField("pos_tags", T.ArrayType(T.StringType()), False),
-    T.StructField("ners", T.ArrayType(T.StringType()), True),
-    T.StructField("dependencies", T.ArrayType(DEP_EDGE), False),
-])
-
-EVENTUALITY_INSTANCE_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType(), False),
-    T.StructField("turn_idx", T.IntegerType(), False),
-    T.StructField("sent_idx", T.IntegerType(), False),
-    T.StructField("eid", T.StringType(), False),
-    T.StructField("pattern", T.StringType(), False),
-    T.StructField("words", T.ArrayType(T.StringType()), False),
-    T.StructField("pos_tags", T.ArrayType(T.StringType()), False),
-    T.StructField("dependencies", T.ArrayType(DEP_EDGE), False),
-    T.StructField("skeleton_word_indices", T.ArrayType(T.IntegerType()), False),
-    T.StructField("verb_indices", T.ArrayType(T.IntegerType()), False),
-    T.StructField("position", T.DoubleType(), False),
-    T.StructField("frequency", T.DoubleType(), False),
-])
-
-RELATION_INSTANCE_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType(), False),
-    T.StructField("hid", T.StringType(), False),
-    T.StructField("tid", T.StringType(), False),
-    T.StructField("sense", T.StringType(), False),
-    T.StructField("weight", T.DoubleType(), False),
-])
 
 # unified single-pass extraction output: node rows carry eventuality fields,
 # edge rows carry (hid, tid, sense); `kind` discriminates.  One schema lets

@@ -61,7 +61,7 @@ def _jsonable(obj):
 class _KernelOps:
     """Compute-command implementations, shared by every handler thread
     (the memo caches are the per-worker sentence caches — identical code
-    path to the Spark mapInPandas kernel)."""
+    path to the Spark mapInArrow kernel)."""
 
     def __init__(self, mode: str = "seed", concept_topk: int = 5):
         from .pipeline.concepts import probase_rows

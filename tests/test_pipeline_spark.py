@@ -1,5 +1,5 @@
-"""Spark-level pipeline tests: invariants, operator composition parity,
-checkpoint/resume, salted aggregation correctness."""
+"""Spark-level pipeline tests: invariants, fused-extraction parity with the
+kernel, checkpoint/resume, salted aggregation correctness."""
 
 import shutil
 from collections import Counter
@@ -63,29 +63,44 @@ def test_per_turn_text_equality_under_stable_ordering(spark, transcripts):
     assert gaps.count() == 0
 
 
-def test_fused_extraction_matches_kernel(spark, transcripts, kernel_expected):
+@pytest.fixture(scope="module")
+def discourse_expected():
+    """Discourse-mode instance rows from the same kernel function the UDF
+    streams through, run driver-side over the same conversations."""
+    from aser_spark.datagen.transcripts import gen_conversation_rows
+    from aser_spark.pipeline.extract import conversation_instance_rows
+
+    rows = Counter()
+    for ci in range(N_CONVS):
+        turns = gen_conversation_rows(42, ci)
+        rows.update(conversation_instance_rows(
+            turns[0][0], [(r[1], r[3]) for r in turns], mode="discourse"))
+    return rows
+
+
+@pytest.mark.parametrize("pre_grouped", [False, True],
+                         ids=["shuffled", "pre_grouped"])
+@pytest.mark.parametrize("mode", ["seed", "discourse"])
+def test_fused_extraction_matches_kernel(spark, transcripts, kernel_expected,
+                                         discourse_expected, mode,
+                                         pre_grouped):
+    """The fused pass equals the driver-side kernel in both modes, through
+    the conv_id exchange and — transcripts_df emits each conversation
+    contiguously in turn order — without it."""
     from aser_spark.pipeline import extract_graph_instances
 
+    inst = extract_graph_instances(transcripts, mode=mode,
+                                   pre_grouped=pre_grouped)
+    if mode == "discourse":
+        assert Counter(map(tuple, inst.collect())) == discourse_expected
+        return
     ev_exp, rel_exp, _ = kernel_expected
-    inst = extract_graph_instances(transcripts).cache()
+    inst = inst.cache()
     got_ev = Counter(
         r.eid for r in inst.filter("kind = 'node'").select("eid").collect())
     got_rel = Counter(
         (r.hid, r.tid, r.sense)
         for r in inst.filter("kind = 'edge'").select("hid", "tid", "sense").collect())
-    assert got_ev == ev_exp
-    assert got_rel == rel_exp
-
-
-def test_composed_operators_match_fused(spark, transcripts, kernel_expected):
-    from aser_spark.pipeline import (extract_eventualities, extract_relations,
-                                     parse_transcripts)
-
-    ev_exp, rel_exp, _ = kernel_expected
-    parsed = parse_transcripts(transcripts).cache()
-    got_ev = Counter(r.eid for r in extract_eventualities(parsed).select("eid").collect())
-    got_rel = Counter((r.hid, r.tid, r.sense)
-                      for r in extract_relations(parsed).collect())
     assert got_ev == ev_exp
     assert got_rel == rel_exp
 
