@@ -818,41 +818,6 @@ def classify_senses(doc_parsed, connectives, syntax_trees, models):
     return connectives
 
 
-def _flank(filtered, s, i, step, k=10):  # k = _MAX_ATTEMPT (defined below)
-    """Up to ``k`` raw token steps from (sent ``s``, token ``i``) in
-    direction ``step``, as (sent_delta, token, pos) triples — the exact
-    stepping _adjacent_index uses, WITHOUT any skip set.  Every
-    cross-boundary feature walk is capped at _MAX_ATTEMPT raw steps, so
-    these triples (plus the two sentences' own text) fully determine
-    every feature a sentence-``s`` walk can observe outside [s-1, s]."""
-    out = []
-    ds, di = s, i
-    for _ in range(k):
-        if step < 0:
-            if di - 1 >= 0:
-                di -= 1
-            elif ds - 1 >= 0:
-                ds -= 1
-                di = len(filtered[ds]["tokens"]) - 1
-                if di < 0:
-                    continue
-            else:
-                break
-        else:
-            if di + 1 < len(filtered[ds]["tokens"]):
-                di += 1
-            elif ds + 1 < len(filtered):
-                ds += 1
-                di = 0
-                if not filtered[ds]["tokens"]:
-                    continue
-            else:
-                break
-        out.append((ds - s, filtered[ds]["tokens"][di],
-                    filtered[ds]["pos_tags"][di]))
-    return tuple(out)
-
-
 def _boundary_ctx(filtered, i, step):
     """The ONE (token, pos) a D2 feature walk can observe beyond sentence
     ``i`` in direction ``step`` — exactly ``_adjacent_token``'s first move
@@ -877,9 +842,8 @@ def _d2_accepted(filtered, i, tree, models, cands):
     ``(text, prev_ctx, next_ctx, tree-is-None)`` exactly keys the accepted
     set.  Zipf-hot sentences previously re-featurized + re-classified
     every candidate on every occurrence in every conversation; this is
-    the relation-pass sibling of the always-on candidate memo (single-
-    sentence keys — high hit rate, trivial key build — unlike the
-    measured-slower full pair memo).  Values are immutable tuples; the
+    the relation-pass sibling of the candidate memo (single-sentence
+    keys: high hit rate, trivial key build).  Values are immutable tuples; the
     caller builds fresh dicts, so downstream mutation (arg spans) cannot
     leak into the memo."""
     sp = filtered[i]
@@ -898,23 +862,18 @@ def _d2_accepted(filtered, i, tree, models, cands):
 
 def _sentence_connective_rows(filtered, sentences, para_eventualities,
                               syntax_trees, i, models, method, threshold,
-                              cands_raw=None):
+                              cands_raw):
     """All relation rows whose connective lives in sentence ``i`` —
     the D2→D3→D4/D5→D6→matching chain restricted to that sentence's
-    candidates.  Per-connective independence of every stage makes this
+    non-empty candidate list ``cands_raw`` (sorted here to canonicalize
+    order).  Per-connective independence of every stage makes this
     exactly the per-``i`` slice of the original doc-wide pass.
-    ``cands_raw`` lets the caller reuse an already-extracted candidate
-    list (the sort here canonicalizes order either way).
 
     Precondition: each syntax tree is a pure function of its sentence's
     text, as every parse-memo caller's is.  The D2 memo keys on the text,
     not the tree, so trees built elsewhere for identical text would be
     served another tree's accepted connectives."""
-    if cands_raw is None:
-        cands_raw = extract_connective_candidates(filtered[i]["tokens"])
     cands = sorted(cands_raw, key=lambda x: x["connective"])
-    if not cands:
-        return []
     connectives = [
         {"connective": conn, "indices": list(idxs), "sent_idx": i}
         for conn, idxs in _d2_accepted(filtered, i, syntax_trees[i],
@@ -957,39 +916,11 @@ def _sentence_connective_rows(filtered, sentences, para_eventualities,
     return rows
 
 
-# (prev_sentence, sentence) pair memo for the relation pass.  The r4
-# profile showed warm-memo discourse cost dominated by this pass because
-# PS features re-read the full previous sentence for every occurrence of
-# a Zipf-hot sentence pair.  Key = both sentences' text + eventuality ids
-# (evs are f(text, separators), so eids pin the separator context) + the
-# raw _MAX_ATTEMPT-token flanks crossing the pair's outer boundaries (the
-# only out-of-pair state any feature walk can observe) + whether the
-# connective sentence's predecessor was eventuality-empty (EMPTY_SENT
-# replacement changes D5's clause source).  Rows reference content-hashed
-# eids only, so cached values are position- and paragraph-portable.
-# DEFAULT OFF: measured on the Spark batch path (5k convs, local[8],
-# 3 reps/arm) the memo is 15-26% SLOWER — pair diversity across 25k
-# conversations plus task-to-worker drift defeats the cache while the
-# key build taxes every miss.  It wins 6x (3.4s -> 0.53s warm on the
-# 12k-turn profile) when the SAME paragraphs recur in one process —
-# the serving-daemon regime, which switches it on at startup.
-_pair_memo_on = False
-
-
-def set_pair_memo(on: bool) -> None:
-    """Opt the current process in/out of the relation-pass pair memo."""
-    global _pair_memo_on
-    _pair_memo_on = bool(on)
-    if not on:
-        _memo.PAIRS.clear()
-
-
 def _connective_candidates(tokens):
-    """``extract_connective_candidates`` memoized by token tuple.  Unlike
-    the pair memo this is ALWAYS on: keys are single sentences (high hit
-    rate under Zipf even across conversations) and the value build is the
-    scan itself, so there is no lose regime.  Consumers never mutate the
-    candidate dicts."""
+    """``extract_connective_candidates`` memoized by token tuple: keys are
+    single sentences (high hit rate under Zipf even across conversations)
+    and the value build is the scan itself, so there is no lose regime.
+    Consumers never mutate the candidate dicts."""
     key = tuple(tokens)
     cands = _memo.CANDIDATES.get(key)
     if cands is None:
@@ -1043,40 +974,15 @@ def extract_paragraph_relations_discourse(sentences, para_eventualities,
         else:
             filtered.append(EMPTY_SENT_PARSED)
 
-    # dep-method reads raw parses
-    memoizable = _pair_memo_on and method.lower() != "discourse"
     for i in range(start, stop):
         sp = filtered[i]
         if not sp["tokens"]:
             continue
         cands_raw = _connective_candidates(sp["tokens"])
-        if not cands_raw:
-            continue  # no connective -> no rows; skip key build entirely
-        if not memoizable:
+        if cands_raw:
             rows.extend(_sentence_connective_rows(
                 filtered, sentences, para_eventualities, syntax_trees, i,
-                models, method, threshold, cands_raw=cands_raw))
-            continue
-        prev_real = sentences[i - 1]["text"] if i > 0 else ""
-        prev_empty = i > 0 and filtered[i - 1] is EMPTY_SENT_PARSED
-        key = (
-            sp["text"],
-            tuple(e["eid"] for e in para_eventualities[i]),
-            prev_real,
-            tuple(e["eid"] for e in para_eventualities[i - 1]) if i else (),
-            prev_empty,
-            _flank(filtered, i - 1 if i else 0, 0, -1),
-            _flank(filtered, i, len(sp["tokens"]) - 1, +1),
-            method,
-            threshold,
-        )
-        hit = _memo.PAIRS.get(key)
-        if hit is None:
-            hit = _sentence_connective_rows(
-                filtered, sentences, para_eventualities, syntax_trees, i,
-                models, method, threshold, cands_raw=cands_raw)
-            _memo.PAIRS.put(key, hit)
-        rows.extend(hit)
+                models, method, threshold, cands_raw))
     return rows
 
 

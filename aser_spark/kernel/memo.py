@@ -71,9 +71,12 @@ SEPARATORS = Memo("discourse.separators", 65536)
 CLAUSES = Memo("discourse.clauses", 16384)
 D2 = Memo("discourse.d2", 1 << 16)
 CANDIDATES = Memo("discourse.candidates", 1 << 16)
-PAIRS = Memo("discourse.pairs", 1 << 16)
+# the serving daemon's (mode, paragraph text) -> (eventualities, relation
+# rows) memo: a paragraph's output is a pure function of that key
+PARAGRAPHS = Memo("serving.paragraphs", 1 << 14)
 
-MEMOS = (SEED_SENTENCES, PARSES, SEPARATORS, CLAUSES, D2, CANDIDATES, PAIRS)
+MEMOS = (SEED_SENTENCES, PARSES, SEPARATORS, CLAUSES, D2, CANDIDATES,
+         PARAGRAPHS)
 
 _frozen = False
 

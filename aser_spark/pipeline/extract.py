@@ -226,10 +226,67 @@ def _group_by_conv(df, num_partitions=None, key="conv_id"):
     return df.repartition(num_partitions, key).sortWithinPartitions(key, "turn_idx")
 
 
+def paragraph_kernel(turns, memo=None, mode="seed", emit_turns=None):
+    """The one paragraph kernel, shared by the Spark extraction and the
+    serving daemon: ``turns`` = (turn_idx, text) pairs in turn order ->
+    ``(sentences, eventualities, relation_rows)``.  ``sentences`` holds
+    one (turn_idx, sent_idx, text) per sentence and ``eventualities`` its
+    records, both restricted to the turns ``emit_turns`` selects (see
+    ``conversation_instance_rows``); ``relation_rows`` are the mode's
+    (hid, tid, sense, weight) rows anchored in that range."""
+    from ..nlp import split_sentences
+
+    if memo is None:
+        memo = _sentence_cache(mode)
+    flat = [(int(turn_idx), sent_idx, sent)
+            for turn_idx, text in turns
+            for sent_idx, sent in enumerate(split_sentences(text))]
+    s_lo, s_hi = 0, len(flat)
+    if emit_turns is not None:
+        lo, hi = emit_turns
+        s_lo = next((k for k, f in enumerate(flat) if f[0] >= lo), len(flat))
+        s_hi = next((k for k, f in enumerate(flat) if f[0] >= hi), len(flat))
+    win = None if emit_turns is None else (s_lo, s_hi)
+    parses, para_evs = [], []
+    if mode == "discourse":
+        from ..kernel.discourse import extract_paragraph_relations_discourse
+
+        # two passes: parse everything first so each sentence's one-token
+        # neighbor context (the only cross-sentence state the connective
+        # classifier sees) is known, then fetch memoized eventualities
+        parsed = [memo.parse(sent)[0] for _, _, sent in flat]
+        n = len(flat)
+        trees = []
+        for i, (_, _, sent) in enumerate(flat):
+            prev_ctx = next_ctx = None
+            if i > 0 and parsed[i - 1]["tokens"]:
+                pp = parsed[i - 1]
+                prev_ctx = (pp["tokens"][-1], pp["pos_tags"][-1])
+            if i + 1 < n and parsed[i + 1]["tokens"]:
+                np_ = parsed[i + 1]
+                next_ctx = (np_["tokens"][0], np_["pos_tags"][0])
+            p, evs, tree = memo(sent, prev_ctx, next_ctx)
+            parses.append(p)
+            para_evs.append(evs)
+            trees.append(tree)
+        rel_rows = extract_paragraph_relations_discourse(
+            parses, para_evs, trees, window=win)
+    else:
+        from ..kernel import extract_paragraph_relations
+
+        for _, _, sent in flat:
+            p, evs = memo(sent)
+            parses.append(p)
+            para_evs.append(evs)
+        rel_rows = extract_paragraph_relations(parses, para_evs, window=win)
+    return flat[s_lo:s_hi], para_evs[s_lo:s_hi], rel_rows
+
+
 def conversation_instance_rows(conv_id, turns, memo=None, mode="seed",
                                emit_turns=None):
     """Pure per-conversation kernel: ``turns`` = (turn_idx, text) pairs in
-    turn order -> INSTANCE_SCHEMA tuples (node + edge rows).
+    turn order -> INSTANCE_SCHEMA tuples (node + edge rows) of
+    ``paragraph_kernel``'s output.
 
     ``emit_turns=(lo, hi)`` restricts emission to rows anchored at turns in
     ``lo <= turn_idx < hi`` while the surrounding turns still provide
@@ -247,50 +304,9 @@ def conversation_instance_rows(conv_id, turns, memo=None, mode="seed",
     instances table — so the driver's oracle checks every downstream
     aggregation against an input produced by identical kernel code (which
     is itself golden-parity-gated vs the reference extractor)."""
-    from ..kernel import extract_paragraph_relations
-    from ..nlp import split_sentences
-
-    if memo is None:
-        memo = _sentence_cache(mode)
+    sents, para_evs, rel_rows = paragraph_kernel(turns, memo, mode, emit_turns)
     out = []
-    sentences, para_evs, keys, trees = [], [], [], []
-    if mode == "discourse":
-        # two passes: parse everything first so each sentence's one-token
-        # neighbor context (the only cross-sentence state the connective
-        # classifier sees) is known, then fetch memoized eventualities
-        flat = [(int(turn_idx), sent_idx, sent)
-                for turn_idx, text in turns
-                for sent_idx, sent in enumerate(split_sentences(text))]
-        parsed = [memo.parse(sent)[0] for _, _, sent in flat]
-        n = len(flat)
-        for i, (turn_idx, sent_idx, sent) in enumerate(flat):
-            prev_ctx = next_ctx = None
-            if i > 0 and parsed[i - 1]["tokens"]:
-                pp = parsed[i - 1]
-                prev_ctx = (pp["tokens"][-1], pp["pos_tags"][-1])
-            if i + 1 < n and parsed[i + 1]["tokens"]:
-                np_ = parsed[i + 1]
-                next_ctx = (np_["tokens"][0], np_["pos_tags"][0])
-            res = memo(sent, prev_ctx, next_ctx)
-            sentences.append(res[0])
-            para_evs.append(res[1])
-            trees.append(res[2])
-            keys.append((turn_idx, sent_idx))
-    else:
-        for turn_idx, text in turns:
-            for sent_idx, sent in enumerate(split_sentences(text)):
-                res = memo(sent)
-                sentences.append(res[0])
-                para_evs.append(res[1])
-                trees.append(res[2] if len(res) > 2 else None)
-                keys.append((int(turn_idx), sent_idx))
-    if emit_turns is None:
-        s_lo, s_hi = 0, len(keys)
-    else:
-        lo, hi = emit_turns
-        s_lo = next((k for k, (t, _) in enumerate(keys) if t >= lo), len(keys))
-        s_hi = next((k for k, (t, _) in enumerate(keys) if t >= hi), len(keys))
-    for (turn_idx, sent_idx), evs in zip(keys[s_lo:s_hi], para_evs[s_lo:s_hi]):
+    for (turn_idx, sent_idx, _), evs in zip(sents, para_evs):
         for e in evs:
             w = e["words"]
             out.append((
@@ -302,14 +318,6 @@ def conversation_instance_rows(conv_id, turns, memo=None, mode="seed",
                 None, None, None, None,
                 " ".join(e.get("ners") or ["O"] * len(w)),
             ))
-    win = None if emit_turns is None else (s_lo, s_hi)
-    if mode == "discourse":
-        from ..kernel.discourse import extract_paragraph_relations_discourse
-
-        rel_rows = extract_paragraph_relations_discourse(
-            sentences, para_evs, trees, window=win)
-    else:
-        rel_rows = extract_paragraph_relations(sentences, para_evs, window=win)
     for hid, tid, sense, wt in rel_rows:
         out.append((
             "edge", conv_id, None, None, None, None, None, None,

@@ -12,9 +12,10 @@ same eleven command shapes —
             fetch_related_eventualities, exact_match_concept,
             exact_match_concept_relation, fetch_related_concepts
 
-Compute commands run the SAME memoized kernel the Spark pipeline uses
-(pipeline/extract.py:_sentence_cache — seed or discourse mode) and the
-reference-exact heap-beam conceptualizer; lookups hit the reference-schema
+Compute commands run the SAME paragraph kernel the Spark pipeline uses
+(pipeline/extract.py:paragraph_kernel — seed or discourse mode, one
+paragraph = one single-turn conversation) and the reference-exact
+heap-beam conceptualizer; lookups hit the reference-schema
 SQLite KG (serving_sqlite.py) through one connection per handler thread.
 The reference's worker pool + two-port ZMQ fanout exists to amortize
 CoreNLP round-trips; here parsing is in-process and microsecond-scale, so
@@ -59,9 +60,12 @@ def _jsonable(obj):
 
 
 class _KernelOps:
-    """Compute-command implementations, shared by every handler thread
-    (the memo caches are the per-worker sentence caches — identical code
-    path to the Spark mapInArrow kernel)."""
+    """Compute-command implementations, shared by every handler thread.
+    A paragraph goes through ``pipeline/extract.py:paragraph_kernel`` as a
+    one-turn conversation — the same sentence loop and relation pass the
+    Spark ``mapInArrow`` kernel runs — and its output is memoized per
+    (mode, text) in ``kernel/memo.py:PARAGRAPHS``, since a daemon sees the
+    same client paragraphs again and again."""
 
     def __init__(self, mode: str = "seed", concept_topk: int = 5):
         from .pipeline.concepts import probase_rows
@@ -72,55 +76,36 @@ class _KernelOps:
         self.memo = _sentence_cache(mode)
         self.concept_topk = concept_topk
         self.probase_index = build_probase_index(probase_rows())
-        if mode == "discourse":
-            # serving repeatedly re-extracts the same client paragraphs in
-            # ONE long-lived process — exactly the regime where the
-            # (prev_sentence, sentence) relation-pass memo wins 6x
-            # (kernel/discourse.py; default-off in the Spark batch path)
-            from .kernel.discourse import set_pair_memo
-
-            set_pair_memo(True)
 
     def parse_text(self, text: str):
         from .nlp import parse_text
 
         return _jsonable(parse_text(text))
 
-    def _para(self, text: str):
-        from .nlp import split_sentences
+    def _paragraph(self, text: str):
+        """(per-sentence eventualities, relation rows) of ``text``."""
+        from .kernel import memo
+        from .pipeline.extract import paragraph_kernel
 
-        sentences, para_evs, trees = [], [], []
-        for sent in split_sentences(text):
-            res = self.memo(sent)
-            sentences.append(res[0])
-            para_evs.append(res[1])
-            trees.append(res[2] if len(res) > 2 else None)
-        return sentences, para_evs, trees
+        key = (self.mode, text)
+        hit = memo.PARAGRAPHS.get(key)
+        if hit is None:
+            _, para_evs, rel_rows = paragraph_kernel(
+                [(0, text)], self.memo, self.mode)
+            hit = (para_evs, rel_rows)
+            memo.PARAGRAPHS.put(key, hit)
+        return hit
 
     def extract_eventualities(self, text: str):
-        _, para_evs, _ = self._para(text)
-        return _jsonable(para_evs)
-
-    def _relations(self, sentences, para_evs, trees):
-        if self.mode == "discourse":
-            from .kernel.discourse import (
-                extract_paragraph_relations_discourse)
-
-            return extract_paragraph_relations_discourse(
-                sentences, para_evs, trees)
-        from .kernel import extract_paragraph_relations
-
-        return extract_paragraph_relations(sentences, para_evs)
+        return _jsonable(self._paragraph(text)[0])
 
     def extract_relations(self, text: str):
-        sentences, para_evs, trees = self._para(text)
-        return _jsonable(self._relations(sentences, para_evs, trees))
+        return _jsonable(self._paragraph(text)[1])
 
     def extract_eventualities_and_relations(self, text: str):
-        sentences, para_evs, trees = self._para(text)
+        para_evs, rel_rows = self._paragraph(text)
         return {"eventualities": _jsonable(para_evs),
-                "relations": _jsonable(
-                    self._relations(sentences, para_evs, trees))}
+                "relations": _jsonable(rel_rows)}
 
     def conceptualize_eventuality(self, arg: dict):
         from .pipeline.concepts_exact import exact_concept_rows

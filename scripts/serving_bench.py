@@ -3,8 +3,10 @@ the reference's live-server benchmarks (test/client/benchmark.py:37-46,
 test/client/speed_test.py:19-37): N calls per API across a small client
 pool against an in-process ASERServingServer, printing calls/s and
 ms/call.  No Spark session: the daemon serves kernel + SQLite only.
+``mode`` picks the daemon's kernel (seed or discourse); the 50 texts
+recur, so after the first 50 calls every compute API runs warm.
 
-Usage: python scripts/serving_bench.py [n_calls] [n_clients]
+Usage: python scripts/serving_bench.py [n_calls] [n_clients] [mode]
 """
 
 from __future__ import annotations
@@ -39,7 +41,8 @@ def _seed_db(path: str, n: int = 1000) -> list:
     return [f"e{i}" for i in range(n)]
 
 
-def run_bench(n_calls: int = 2000, n_clients: int = 4) -> dict:
+def run_bench(n_calls: int = 2000, n_clients: int = 4,
+              mode: str = "seed") -> dict:
     """Drive the daemon's API surface over a client pool and return
     calls/s + ms/call per API.  The headline trio mirrors the reference
     harness verbatim (benchmark.py:44-58): extract_eventualities in
@@ -54,9 +57,9 @@ def run_bench(n_calls: int = 2000, n_clients: int = 4) -> dict:
     texts = [f"the dog barked because the cat slept number {i}. we went home."
              for i in range(50)]
 
-    out = {"metric": "serving_bench", "n_calls": n_calls,
+    out = {"metric": "serving_bench", "mode": mode, "n_calls": n_calls,
            "n_clients": n_clients}
-    with ASERServingServer(db_path=db) as srv:
+    with ASERServingServer(db_path=db, mode=mode) as srv:
         host, port = srv.address
 
         calls = {
@@ -64,6 +67,8 @@ def run_bench(n_calls: int = 2000, n_clients: int = 4) -> dict:
                 lambda cli, i: cli.exact_match_eventuality(eids[i % len(eids)]),
             "extract_eventualities":
                 lambda cli, i: cli.extract_eventualities(texts[i % len(texts)]),
+            "extract_relations":
+                lambda cli, i: cli.extract_relations(texts[i % len(texts)]),
             "parse_text":
                 lambda cli, i: cli.parse_text(texts[i % len(texts)]),
             "predict_relation":
@@ -98,7 +103,8 @@ def run_bench(n_calls: int = 2000, n_clients: int = 4) -> dict:
 def main():
     n_calls = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
     n_clients = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    print(json.dumps(run_bench(n_calls, n_clients)))
+    mode = sys.argv[3] if len(sys.argv) > 3 else "seed"
+    print(json.dumps(run_bench(n_calls, n_clients, mode)))
 
 
 if __name__ == "__main__":

@@ -98,29 +98,28 @@ def test_heldout_discourse_weight_groups(paragraphs):
         assert abs(wt * inv - 1.0) < 1e-6, f"non-unit-fraction weight {wt}"
 
 
-def test_pair_memo_rows_identical(paragraphs):
-    """The (prev_sentence, sentence) relation-pass pair memo (serving
-    regime) must be row-identical to the memo-off batch path on
-    arbitrary held-out text — run twice with memo on so the second pass
-    exercises cache HITS."""
+def test_serving_paragraph_memo_rows_identical(paragraphs):
+    """The serving daemon's (mode, text) paragraph memo must serve
+    exactly the kernel's relation rows on arbitrary held-out text — run
+    twice so the second pass is served from memo HITS."""
     from aser_spark.kernel import memo
-    from aser_spark.kernel.discourse import set_pair_memo
+    from aser_spark.pipeline.extract import conversation_instance_rows
+    from aser_spark.serving_net import ASERServingClient, ASERServingServer
 
-    sample = paragraphs[:30]
-    try:
-        set_pair_memo(False)
-        off = _all_rows(sample, "discourse")
-        set_pair_memo(True)
+    texts = [t for _, doc in paragraphs[:30] for t in doc]
+    want = [[list(r[12:16]) for r in conversation_instance_rows(
+                "c", [(0, t)], mode="discourse") if r[0] == "edge"]
+            for t in texts]
+    with ASERServingServer(mode="discourse") as srv:
         memo.reset()
-        on_cold = _all_rows(sample, "discourse")
-        cold = (memo.PAIRS.hits, memo.PAIRS.misses)
-        on_warm = _all_rows(sample, "discourse")
-        assert memo.PAIRS.misses > 0, "memo never populated"
-        assert memo.PAIRS.hits > cold[0], "warm pass never hit the memo"
-        assert memo.PAIRS.misses == cold[1], "warm pass missed the memo"
-    finally:
-        set_pair_memo(False)
-    assert off == on_cold == on_warm
+        with ASERServingClient(*srv.address) as cli:
+            cold = [cli.extract_relations(t) for t in texts]
+            hits, misses = memo.PARAGRAPHS.hits, memo.PARAGRAPHS.misses
+            warm = [cli.extract_relations(t) for t in texts]
+    assert misses > 0, "memo never populated"
+    assert memo.PARAGRAPHS.hits > hits, "warm pass never hit the memo"
+    assert memo.PARAGRAPHS.misses == misses, "warm pass missed the memo"
+    assert cold == want and warm == want
 
 
 def test_heldout_coverage_floor(corpus, paragraphs):

@@ -17,29 +17,54 @@ def _server(db_path=None, **kw):
     return ASERServingServer(db_path=db_path, **kw)
 
 
+def _fixture_text(name, line_no):
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "fixtures" / name
+    with open(path) as f:
+        line = f.readlines()[line_no - 1]
+    return json.loads(line)["doc_texts"][0]
+
+
 def test_compute_commands_match_kernel():
-    from aser_spark.pipeline.extract import _sentence_cache
+    """Serving a paragraph yields exactly what the KG build extracts from
+    it as a one-turn conversation, in both kernel modes.  The
+    heldout_prose4 paragraph is one whose discourse eventualities depend
+    on the one-token neighbour context of the sentence loop."""
+    for mode in ("seed", "discourse"):
+        _check_compute_commands(mode)
+
+
+def _check_compute_commands(mode):
+    from collections import Counter
+
+    from aser_spark.pipeline.extract import conversation_instance_rows
     from aser_spark.serving_net import ASERServingClient
 
     text = "the dog barked because the cat slept. we went home."
-    with _server() as srv:
+    texts = [text, _fixture_text("heldout_prose4.jsonl", 64)]
+    with _server(mode=mode) as srv:
         host, port = srv.address
         with ASERServingClient(host, port) as cli:
             parsed = cli.parse_text(text)
             assert len(parsed) == 2 and parsed[0]["tokens"][0] == "the"
 
-            evs = cli.extract_eventualities(text)
-            memo = _sentence_cache("seed")
-            want0 = memo("the dog barked because the cat slept.")[1]
-            assert [e["eid"] for e in evs[0]] == [e["eid"] for e in want0]
-            assert len(evs) == 2
+            for t in texts:
+                rows = conversation_instance_rows("c", [(0, t)], mode=mode)
+                want_eids = [r[4] for r in rows if r[0] == "node"]
+                want_edges = Counter(tuple(r[12:16]) for r in rows
+                                     if r[0] == "edge")
+                both = cli.extract_eventualities_and_relations(t)
+                assert [e["eid"] for evs in both["eventualities"]
+                        for e in evs] == want_eids
+                assert Counter(tuple(r) for r in both["relations"]) \
+                    == want_edges
+                assert cli.extract_eventualities(t) == both["eventualities"]
+                assert cli.extract_relations(t) == both["relations"]
 
-            rels = cli.extract_relations(text)
-            both = cli.extract_eventualities_and_relations(text)
-            assert both["relations"] == rels
-            assert [s[0] and s[0]["eid"] for s in both["eventualities"]] \
-                == [s[0] and s[0]["eid"] for s in evs]
-            senses = {r[2] for r in rels}
+            evs = cli.extract_eventualities(text)
+            assert len(evs) == 2 and evs[0]
+            senses = {r[2] for r in cli.extract_relations(text)}
             assert "Reason" in senses or "Co_Occurrence" in senses
 
             cons = cli.conceptualize_eventuality(
@@ -169,8 +194,9 @@ def test_malformed_lines_and_blob_info_get_replies(spark, tmp_path):
 
 
 def test_serving_bench_harness_smoke():
-    """The BENCH/SERVING.md harness must run end-to-end: all five APIs
-    driven over a client pool, positive throughput for each."""
+    """The BENCH/SERVING.md harness must run end-to-end in both kernel
+    modes: all six APIs driven over a client pool, positive throughput
+    for each."""
     import importlib.util
     from pathlib import Path
 
@@ -179,9 +205,11 @@ def test_serving_bench_harness_smoke():
         Path(__file__).resolve().parent.parent / "scripts" / "serving_bench.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    out = mod.run_bench(n_calls=40, n_clients=2)
-    for api in ("exact_match_eventuality", "extract_eventualities",
-                "parse_text", "predict_relation",
-                "fetch_related_eventualities"):
-        assert out[f"{api}_calls_per_sec"] > 0
-        assert out[f"{api}_ms_per_call"] > 0
+    for mode in ("seed", "discourse"):
+        out = mod.run_bench(n_calls=40, n_clients=2, mode=mode)
+        assert out["mode"] == mode
+        for api in ("exact_match_eventuality", "extract_eventualities",
+                    "extract_relations", "parse_text", "predict_relation",
+                    "fetch_related_eventualities"):
+            assert out[f"{api}_calls_per_sec"] > 0
+            assert out[f"{api}_ms_per_call"] > 0
