@@ -47,12 +47,14 @@ def get_spark(app="aser-spark", cpus: int | None = None, shuffle_partitions: int
         # 117s vs 30s for the identical stage at 48g)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         # spark.python.worker.reuse stays at its default (true): long-lived
-        # workers keep the Zipf sentence memos warm across tasks, and the
-        # cross-mode heap poison that reuse used to carry (4-8x slower
-        # kernel tasks after a prior mode's memos went resident) is fixed
-        # at the source — a mode switch in _sentence_cache resets every
-        # worker memo and trims the heap (kernel/memo.py; forensics in
-        # BENCH/NOTES.md §r6).  reuse=false was tried and reverted: per-
+        # workers keep the Zipf sentence memos warm across tasks.  What
+        # reuse used to cost is fixed at the source (kernel/memo.py): a
+        # mode switch in _sentence_cache resets every worker memo and
+        # trims the heap (4-8x slower kernel tasks after a prior mode's
+        # memos went resident, BENCH/NOTES.md §r6), and memo.task_end keeps
+        # pyspark's per-task importer refresh and post-task GC collect at
+        # milliseconds instead of 0.3-0.5s per task (BENCH/NOTES.md,
+        # "per-task worker tax").  reuse=false was tried and reverted: per-
         # stage mass worker exits (32 procs x 100-400MB heaps) feed the
         # sandbox kernel's reclaim backlog, the very storm being avoided.
         .config("spark.ui.enabled", "false")

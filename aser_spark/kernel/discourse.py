@@ -818,48 +818,6 @@ def classify_senses(doc_parsed, connectives, syntax_trees, models):
     return connectives
 
 
-def _boundary_ctx(filtered, i, step):
-    """The ONE (token, pos) a D2 feature walk can observe beyond sentence
-    ``i`` in direction ``step`` — exactly ``_adjacent_token``'s first move
-    across the boundary (it returns after a single step); None at the
-    document edge.  Like ``_adjacent_token``, an empty neighbor raises."""
-    j = i + step
-    if j < 0 or j >= len(filtered):
-        return None
-    sp = filtered[j]
-    k = -1 if step < 0 else 0
-    return (sp["tokens"][k], sp["pos_tags"][k])
-
-
-def _d2_accepted(filtered, i, tree, models, cands):
-    """Classifier-accepted connective spans for sentence ``i`` of the
-    relation pass, memoized per worker.
-
-    The D2 connective features are a pure function of (the sentence's own
-    tokens/pos, ONE boundary token each way, the sentence's constituency
-    tree) — and the tree is itself a deterministic function of the
-    sentence text for every pipeline caller (the parse memo), so
-    ``(text, prev_ctx, next_ctx, tree-is-None)`` exactly keys the accepted
-    set.  Zipf-hot sentences previously re-featurized + re-classified
-    every candidate on every occurrence in every conversation; this is
-    the relation-pass sibling of the candidate memo (single-sentence
-    keys: high hit rate, trivial key build).  Values are immutable tuples; the
-    caller builds fresh dicts, so downstream mutation (arg spans) cannot
-    leak into the memo."""
-    sp = filtered[i]
-    key = (sp["text"], _boundary_ctx(filtered, i, -1),
-           _boundary_ctx(filtered, i, +1),
-           tree is None or tree.tree is None)
-    hit = _memo.D2.get(key)
-    if hit is None:
-        hit = tuple(
-            (c["connective"], tuple(c["indices"])) for c in cands
-            if models.is_connective(connective_feature_strings(
-                filtered, i, c["indices"], tree)))
-        _memo.D2.put(key, hit)
-    return hit
-
-
 def _sentence_connective_rows(filtered, sentences, para_eventualities,
                               syntax_trees, i, models, method, threshold,
                               cands_raw):
@@ -867,17 +825,13 @@ def _sentence_connective_rows(filtered, sentences, para_eventualities,
     the D2→D3→D4/D5→D6→matching chain restricted to that sentence's
     non-empty candidate list ``cands_raw`` (sorted here to canonicalize
     order).  Per-connective independence of every stage makes this
-    exactly the per-``i`` slice of the original doc-wide pass.
-
-    Precondition: each syntax tree is a pure function of its sentence's
-    text, as every parse-memo caller's is.  The D2 memo keys on the text,
-    not the tree, so trees built elsewhere for identical text would be
-    served another tree's accepted connectives."""
-    cands = sorted(cands_raw, key=lambda x: x["connective"])
+    exactly the per-``i`` slice of the original doc-wide pass."""
     connectives = [
-        {"connective": conn, "indices": list(idxs), "sent_idx": i}
-        for conn, idxs in _d2_accepted(filtered, i, syntax_trees[i],
-                                       models, cands)
+        {"connective": c["connective"], "indices": list(c["indices"]),
+         "sent_idx": i}
+        for c in sorted(cands_raw, key=lambda x: x["connective"])
+        if models.is_connective(connective_feature_strings(
+            filtered, i, c["indices"], syntax_trees[i]))
     ]
     ss_conns, ps_conns = [], []
     for c in connectives:

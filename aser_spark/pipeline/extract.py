@@ -55,6 +55,7 @@ def release_extraction_memory(spark=None) -> None:
         memo.reset()
         for _ in batches:
             pass
+        memo.task_end()
         yield pa.record_batch([pa.array([1], pa.int32())], names=["ok"])
 
     (spark.range(0, n_tasks, 1, n_tasks)
@@ -206,6 +207,23 @@ def _arrow_frame(rows, arrow_schema):
     return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
 
+def _task_frames(row_lists, arrow_schema):
+    """A ``mapInArrow`` body's output: the rows of ``row_lists`` in
+    16384-row frames.  The per-task memo hook (``kernel/memo.py``
+    ``task_end``) runs once the input is drained, before the last frame is
+    yielded, so it does not wait on the consumer to exhaust this
+    generator."""
+    out = []
+    for rows in row_lists:
+        out.extend(rows)
+        if len(out) >= 16384:
+            yield _arrow_frame(out, arrow_schema)
+            out = []
+    last = _arrow_frame(out, arrow_schema)
+    _memo.task_end()
+    yield last
+
+
 def _group_by_conv(df, num_partitions=None, key="conv_id"):
     """Hash-repartition by ``key`` with an EXPLICIT partition count, each
     partition sorted by (key, turn_idx).
@@ -216,10 +234,12 @@ def _group_by_conv(df, num_partitions=None, key="conv_id"):
     cores.  Explicit numPartitions pins the exchange.  Default =
     ``max(defaultParallelism, 8)``: one task per core on hosts with 8 or
     more cores, and at least two task waves on hosts with 4 or fewer.  Each
-    Arrow-UDF task costs ~40ms in worker handshake alone, so oversplitting
-    a CPU-bound stage (the classic 2-3x rule for JVM stages) measurably
-    hurts; conversations hash uniformly, so straggler risk at one task per
-    core is minimal.  Raise it for skewed real corpora."""
+    Python task on a reused worker pays a fixed cost besides the handshake:
+    pyspark's per-task ``importlib.invalidate_caches()``, ~10ms after
+    ``memo.task_end`` (BENCH/NOTES.md, "per-task worker tax").  So
+    oversplitting a CPU-bound stage (the classic 2-3x rule for JVM stages)
+    measurably hurts; conversations hash uniformly, so straggler risk at
+    one task per core is minimal.  Raise it for skewed real corpora."""
     if num_partitions is None:
         sc = df.sparkSession.sparkContext
         num_partitions = max(sc.defaultParallelism, 8)
@@ -391,23 +411,18 @@ def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
     def emit(groups):
         """The one ``mapInArrow`` body.  ``groups(batches)`` yields
         ``(conv_id, turns, emit_turns)`` per grouping key; the memo
-        residency, the freeze and the 16384-row flush are shared."""
+        residency and the framing are shared."""
         def run(batches):
             from pyspark.sql.pandas.types import to_arrow_schema
 
-            arrow_schema = to_arrow_schema(INSTANCE_SCHEMA)
             # resets a stale mode's — or, under a new memo_generation, this
-            # mode's own — memos FIRST, then freezes what survives
+            # mode's own — memos first
             memo = _sentence_cache(mode, memo_generation)
-            _memo.freeze_once()
-            out = []
-            for conv_id, turns, emit_turns in groups(batches):
-                out.extend(conversation_instance_rows(
-                    conv_id, turns, memo, mode, emit_turns=emit_turns))
-                if len(out) >= 16384:
-                    yield _arrow_frame(out, arrow_schema)
-                    out = []
-            yield _arrow_frame(out, arrow_schema)
+            yield from _task_frames(
+                (conversation_instance_rows(conv_id, turns, memo, mode,
+                                            emit_turns=emit_turns)
+                 for conv_id, turns, emit_turns in groups(batches)),
+                to_arrow_schema(INSTANCE_SCHEMA))
 
         return run
 
@@ -546,17 +561,15 @@ def parse_coverage(transcripts):
     def run(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        arrow_schema = to_arrow_schema(_coverage_struct())
         memo = _sentence_cache("seed")
-        _memo.freeze_once()
-        for rb in batches:
-            out = []
-            for conv_id, turn_idx, text in zip(
-                    rb.column("conv_id").to_pylist(),
-                    rb.column("turn_idx").to_pylist(),
-                    rb.column("text").to_pylist()):
-                out.extend(turn_coverage_rows(conv_id, turn_idx, text, memo))
-            yield _arrow_frame(out, arrow_schema)
+        yield from _task_frames(
+            (turn_coverage_rows(conv_id, turn_idx, text, memo)
+             for rb in batches
+             for conv_id, turn_idx, text in zip(
+                 rb.column("conv_id").to_pylist(),
+                 rb.column("turn_idx").to_pylist(),
+                 rb.column("text").to_pylist())),
+            to_arrow_schema(_coverage_struct()))
 
     return (transcripts.select("conv_id", "turn_idx", "text")
             .mapInArrow(run, schema=COVERAGE_SCHEMA))

@@ -299,3 +299,55 @@ def test_memo_is_a_bounded_lru_across_threads():
     for t in threads:
         t.join()
     assert 0 < len(shared) <= 64
+
+
+def test_task_end_bounds_frozen_cyclic_garbage(monkeypatch):
+    """``memo.task_end`` freezes what a task left resident, and a frozen
+    value that holds a reference cycle (a parse tree's ``up`` links) is
+    reclaimed only by an unfreeze once evicted.  Over many put/evict/
+    task-end rounds the frozen set must stay within the resident entries
+    plus one capacity's worth of evicted values, and ``reset()`` must
+    bring it back to the baseline."""
+    import gc
+
+    from aser_spark.kernel import memo
+
+    class Node:
+        def __init__(self, up=None):
+            self.up = up
+            self.kids = []
+
+    def tree():
+        root = Node()
+        root.kids = [Node(root) for _ in range(8)]
+        return root
+
+    cap, per_round, slack = 64, 16, 500
+    before = len(gc.get_objects())
+    sample = [tree() for _ in range(100)]
+    per_value = (len(gc.get_objects()) - before) / len(sample)
+    del sample
+    m = memo.Memo("test.cyclic", cap, cyclic=True)
+    monkeypatch.setattr(memo, "MEMOS", memo.MEMOS + (m,))
+    thresholds = gc.get_threshold()
+    try:
+        memo.reset()
+        memo.task_end()
+        base = gc.get_freeze_count()
+        peak, key = 0, 0
+        for _ in range(100):
+            for _ in range(per_round):
+                m.put(key, tree())
+                key += 1
+            memo.task_end()
+            peak = max(peak, gc.get_freeze_count() - base)
+        # 1,600 values went through a 64-entry memo: unbounded, ~1,536
+        # evicted trees would stay frozen
+        assert peak <= 2 * cap * per_value + slack
+        memo.reset()
+        assert gc.get_freeze_count() == 0 and len(m) == 0
+        memo.task_end()
+        assert gc.get_freeze_count() <= base + slack
+    finally:
+        memo.reset()
+        gc.set_threshold(*thresholds)

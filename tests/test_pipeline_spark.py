@@ -272,13 +272,43 @@ def test_memo_generation_and_release_identical_rows(spark, transcripts, mode):
     assert base == gen1 == gen2
     assert {m.name: len(m) for m in memo.MEMOS if len(m)} == {}
 
-    # a mode switch drops the discourse relation-pass memos as well
+    # a mode switch drops the discourse relation-pass memo as well
     conversation_instance_rows(
         "c", [(0, "i stayed home because it was raining."),
               (1, "so we watched a movie.")], mode="discourse")
-    assert len(memo.D2) and len(memo.CANDIDATES)
+    assert len(memo.CANDIDATES)
     _sentence_cache("seed")
     assert {m.name: len(m) for m in memo.MEMOS if len(m)} == {}
+
+
+@pytest.mark.parametrize("mode", ["seed", "discourse"])
+def test_extract_leaves_workers_ready_for_next_task(spark, transcripts,
+                                                    mode):
+    """After an extract, every reused worker that ran it starts its next
+    task cheaply: no subpackage zipimporter is left for pyspark's per-task
+    ``importlib.invalidate_caches()`` to re-read, and what the task left
+    resident is frozen, so the cyclic GC's post-task collect scans little.
+    Structural facts only (scripts/worker_tax.py reports the timings)."""
+    import importlib.util
+    from pathlib import Path
+
+    from aser_spark.pipeline import extract_graph_instances
+
+    spec = importlib.util.spec_from_file_location(
+        "worker_tax",
+        Path(__file__).resolve().parent.parent / "scripts" / "worker_tax.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    n = spark.sparkContext.defaultParallelism
+    # 4x oversubscribed: the idle-worker queue is FIFO, so every pooled
+    # worker runs an extract task last
+    extract_graph_instances(transcripts, num_partitions=4 * n,
+                            mode=mode).count()
+    workers = [w for w in mod.probe_workers(spark, n) if w["memo_entries"]]
+    assert workers
+    for w in workers:
+        assert w["subpackage_importers"] == 0, w
+        assert w["tracked"] * 10 < w["frozen"], w
 
 
 def test_merge_lineage_matches_full_build(spark, transcripts):
